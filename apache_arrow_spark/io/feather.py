@@ -41,5 +41,7 @@ def read_feather(
     """feather.read_feather parity (feather.py:114) with column selection."""
     import pyarrow.feather as feather
 
+    from apache_arrow_spark.io.pandas_bridge import _ingest
+
     table = feather.read_table(source, columns=list(columns) if columns else None)
-    return spark.createDataFrame(table)
+    return _ingest(spark, table)

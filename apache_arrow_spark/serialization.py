@@ -225,46 +225,58 @@ def _build_list_of_union(lists: list[list], ctx: SerializationContext) -> pa.Lis
 # ---------------------------------------------------------------------------
 
 
-def _read_union(arr: pa.UnionArray, i: int, ctx: SerializationContext):
+def _read_union(arr: pa.UnionArray, ctx: SerializationContext) -> list:
+    """Every slot of a dense union as a Python value, column at a time:
+    each child decodes once (``to_pylist`` for the primitive kinds, a
+    recursive decode of the list/dict/custom children's values), then
+    slots look their value up by type code and offset."""
+    if len(arr) == 0:
+        return []  # IPC-read empty unions have no buffers to view
     at = arr.type
-    code = arr.type_codes[i].as_py()
-    child_idx = at.type_codes.index(code)  # child position for this code
-    tag = at.field(child_idx).name
-    off = arr.offsets[i].as_py()
-    child = arr.field(child_idx)
+    by_code = {
+        code: _read_child(at.field(i).name, arr.field(i), ctx)
+        for i, code in enumerate(at.type_codes)
+    }
+    return [
+        by_code[code][off]
+        for code, off in zip(arr.type_codes.to_pylist(), arr.offsets.to_pylist())
+    ]
+
+
+def _read_child(tag: str, child: pa.Array, ctx: SerializationContext) -> list:
     if tag == "null":
-        return None
+        return [None] * len(child)
     if tag in ("bool", "int", "float", "string", "binary"):
-        return child[off].as_py()
+        return child.to_pylist()
     if tag in ("list", "tuple"):
-        inner = child.values
-        lo = child.offsets[off].as_py()
-        hi = child.offsets[off + 1].as_py()
-        out = [_read_union(inner, j, ctx) for j in range(lo, hi)]
-        return tuple(out) if tag == "tuple" else out
+        lists = _read_list_of_union(child, ctx)
+        return [tuple(v) for v in lists] if tag == "tuple" else lists
     if tag == "dict":
-        keys = _read_list_of_union(child.field("keys"), off, ctx)
-        vals = _read_list_of_union(child.field("vals"), off, ctx)
-        return dict(zip(keys, vals))
+        keys = _read_list_of_union(child.field("keys"), ctx)
+        vals = _read_list_of_union(child.field("vals"), ctx)
+        return [dict(zip(k, v)) for k, v in zip(keys, vals)]
     if tag == "custom":
-        type_id = child.field("type_id")[off].as_py()
-        payload = _read_union(child.field("payload"), off, ctx)
-        h = ctx._by_id.get(type_id)
-        if h is None:
-            raise DeserializationCallbackError(
-                f"no deserialization handler for type id {type_id!r}", type_id
-            )
-        if h.pickle_:
-            return pickle.loads(payload)
-        return h.deserializer(payload)
+        type_ids = child.field("type_id").to_pylist()
+        payloads = _read_union(child.field("payload"), ctx)
+        return [_custom_value(t, p, ctx) for t, p in zip(type_ids, payloads)]
     raise AssertionError(tag)  # pragma: no cover
 
 
-def _read_list_of_union(list_arr: pa.ListArray, i: int, ctx: SerializationContext):
-    inner = list_arr.values
-    lo = list_arr.offsets[i].as_py()
-    hi = list_arr.offsets[i + 1].as_py()
-    return [_read_union(inner, j, ctx) for j in range(lo, hi)]
+def _custom_value(type_id: str, payload, ctx: SerializationContext):
+    h = ctx._by_id.get(type_id)
+    if h is None:
+        raise DeserializationCallbackError(
+            f"no deserialization handler for type id {type_id!r}", type_id
+        )
+    if h.pickle_:
+        return pickle.loads(payload)
+    return h.deserializer(payload)
+
+
+def _read_list_of_union(list_arr: pa.ListArray, ctx: SerializationContext) -> list[list]:
+    inner = _read_union(list_arr.values, ctx)
+    offs = list_arr.offsets.to_pylist()
+    return [inner[lo:hi] for lo, hi in zip(offs, offs[1:])]
 
 
 # ---------------------------------------------------------------------------
@@ -307,7 +319,7 @@ def deserialize(data, context: SerializationContext | None = None):
     arr = data.batch.column(0)
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    return _read_union(arr, 0, ctx)
+    return _read_union(arr, ctx)[0]
 
 
 def default_serialization_context() -> SerializationContext:

@@ -54,7 +54,9 @@ class Table:
     def from_pandas(cls, spark: SparkSession, pdf, schema=None) -> "Table":
         """pandas ingest (reference Table.from_pandas, table.pxi:843) — rides
         Spark's Arrow path (spark.sql.execution.arrow.pyspark.enabled)."""
-        return cls(spark.createDataFrame(pdf, schema=schema))
+        from apache_arrow_spark.io.pandas_bridge import _ingest
+
+        return cls(_ingest(spark, pdf, schema))
 
     @classmethod
     def from_batches(cls, spark: SparkSession, batches) -> "Table":
@@ -62,7 +64,9 @@ class Table:
         cpp/src/arrow/table.h:174)."""
         import pyarrow as pa
 
-        return cls(spark.createDataFrame(pa.Table.from_batches(list(batches))))
+        from apache_arrow_spark.io.pandas_bridge import _ingest
+
+        return cls(_ingest(spark, pa.Table.from_batches(list(batches))))
 
     @property
     def df(self) -> DataFrame:

@@ -588,3 +588,128 @@ def test_write_ipc_warns_shard_cols_without_num_shards(spark, tmp_path):
         write_ipc(df, path, shard_cols=("k",))
     assert any("shard_cols is ignored" in str(w.message) for w in caught)
     assert read_ipc(spark, path).count() == 8
+
+
+# -- ingest path (pandas_bridge._ingest) ------------------------------------
+
+
+def _batch_rows(spark):
+    return int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+
+def _ingest_frame(n):
+    """n rows with nulls, decimals, tz-aware timestamps, strings and an
+    unsigned column (widened by from_arrow)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    t0 = dt.datetime(2024, 3, 10, 6, 30, tzinfo=dt.timezone.utc)
+    return pa.table(
+        {
+            "id": pa.array(range(n), pa.int64()),
+            "s": pa.array([None if i % 7 == 0 else f"s{i}" for i in range(n)]),
+            "d": pa.array(
+                [None if i % 11 == 0 else Decimal(i * 37 - 5000).scaleb(-2) for i in range(n)],
+                pa.decimal128(12, 2),
+            ),
+            "ts": pa.array(
+                [None if i % 13 == 0 else t0 + dt.timedelta(minutes=i) for i in range(n)],
+                pa.timestamp("us", tz="America/New_York"),
+            ),
+            "u": pa.array([None if i % 5 == 0 else 4_000_000_000 - i for i in range(n)], pa.uint32()),
+        }
+    )
+
+
+def _read_feather_of(spark, tbl, tmp_path):
+    import pyarrow.feather as feather
+
+    f = str(tmp_path / "ingest.feather")
+    feather.write_feather(tbl, f)
+    return read_feather(spark, f)
+
+
+_INGEST_ENTRY_POINTS = {
+    "from_pandas": lambda spark, tbl, _: from_pandas(spark, tbl.to_pandas()),
+    "from_arrow": lambda spark, tbl, _: from_arrow(spark, tbl),
+    "read_feather": _read_feather_of,
+}
+
+
+def _optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("entry", list(_INGEST_ENTRY_POINTS))
+def test_ingest_above_one_batch_ships_arrow_partitions(spark, tmp_path, entry):
+    """More than one Arrow batch of rows lands as one batch per
+    partition: no LocalRelation, compute_parallelism partitions, and
+    the session conf left byte-identical (Table's two entry points are
+    covered in test_table.py)."""
+    from apache_arrow_spark.session import compute_parallelism
+
+    n = 2 * _batch_rows(spark) + 1
+    # several chunks: Spark cuts batches within chunks
+    tbl = pa.Table.from_batches(_ingest_frame(n).select(["id", "s"]).to_batches(n // 3))
+    before = spark.conf.getAll
+    df = _INGEST_ENTRY_POINTS[entry](spark, tbl, tmp_path)
+    assert spark.conf.getAll == before
+    assert "LocalRelation" not in _optimized_plan(df)
+    assert df.rdd.getNumPartitions() == compute_parallelism(spark)
+    assert df.count() == tbl.num_rows
+
+
+def test_ingest_from_arrow_values_round_trip(spark):
+    tbl = _ingest_frame(2 * _batch_rows(spark) + 1)
+    df = from_arrow(spark, tbl)
+    assert "LocalRelation" not in _optimized_plan(df)
+    assert df.schema["u"].dataType.simpleString() == "bigint"
+    got = df.toArrow().sort_by("id")
+    utc = pa.timestamp("us", tz="UTC")
+    for name in ("id", "s", "d", "u"):
+        assert got[name].to_pylist() == tbl[name].to_pylist(), name
+    assert got["ts"].cast(utc).to_pylist() == tbl["ts"].cast(utc).to_pylist()
+
+
+def test_ingest_from_pandas_values_and_index_round_trip(spark):
+    """Nulls, decimals and strings survive the batch-per-partition path,
+    and the preserved index comes back from the b'pandas' metadata."""
+    from apache_arrow_spark.io.pandas_bridge import PANDAS_META_KEY
+
+    pdf = _ingest_frame(2 * _batch_rows(spark) + 1).select(["id", "s", "d"]).to_pandas()
+    pdf["x"] = [None if i % 3 == 0 else i / 8 for i in range(len(pdf))]
+    pdf.index = pd.Index(pdf["id"] * 10 + 3, name="rowid")
+    sdf = from_pandas(spark, pdf, preserve_index=True)
+    assert "LocalRelation" not in _optimized_plan(sdf)
+    assert PANDAS_META_KEY in sdf.schema.fields[0].metadata
+    back = to_pandas(sdf).sort_index()
+    assert back.index.name == "rowid"
+    pd.testing.assert_frame_equal(back, pdf)
+
+
+def test_ingest_at_most_one_batch_stays_broadcastable(spark):
+    """A frame of at most one batch keeps its LocalRelation, whose exact
+    size statistics let a join broadcast it."""
+    small = from_pandas(spark, pd.DataFrame({"id": range(_batch_rows(spark)), "tag": "t"}))
+    assert "LocalRelation" in _optimized_plan(small)
+    joined = spark.range(50_000).join(small, "id")
+    assert "BroadcastHashJoin" in joined._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.filterwarnings("ignore:createDataFrame attempted Arrow optimization")
+@pytest.mark.parametrize("session_batch", [None, "15000"])
+def test_ingest_restores_conf_when_create_raises(spark, session_batch):
+    """spark.conf is byte-identical after an ingest whose createDataFrame
+    raises (the Arrow attempt and the row fallback both reject strings
+    for a struct), whether the batch size was session-set or not."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    if session_batch:
+        spark.conf.set(key, session_batch)
+    try:
+        before = spark.conf.getAll
+        pdf = pd.DataFrame({"a": ["x"] * (2 * _batch_rows(spark) + 1)})
+        with pytest.raises(TypeError):
+            from_pandas(spark, pdf, schema="a struct<b: int>")
+        assert spark.conf.getAll == before
+    finally:
+        spark.conf.unset(key)

@@ -3,6 +3,7 @@ round-trips (reference python/pyarrow/serialization.py:63-182,
 cpp/src/arrow/python/python_to_arrow.cc:54-414)."""
 
 import datetime
+import random
 from collections import OrderedDict, defaultdict
 
 import numpy as np
@@ -10,6 +11,7 @@ import pyarrow as pa
 import pytest
 
 from apache_arrow_spark.serialization import (
+    DeserializationCallbackError,
     SerializationCallbackError,
     SerializationContext,
     default_serialization_context,
@@ -121,6 +123,64 @@ def test_register_pickle_fallback():
     ctx.register_type(Blob, "my.Blob", pickle=True)
     back = deserialize(serialize(Blob({"deep": [1, 2]}), ctx).to_buffer(), ctx)
     assert back == Blob({"deep": [1, 2]})
+
+
+def _mixed_value(rng: random.Random, depth: int = 0):
+    """A seeded value of any tag: every primitive, list, tuple, dict and
+    the custom kinds (OrderedDict, defaultdict, date, datetime, a
+    pickle-registered Blob), nested up to three levels."""
+    leaves = [
+        lambda: None,
+        lambda: rng.random() < 0.5,
+        lambda: rng.randrange(-(1 << 62), 1 << 62),
+        rng.random,
+        lambda: "s%x" % rng.getrandbits(24),
+        lambda: rng.getrandbits(32).to_bytes(4, "little"),
+        lambda: datetime.date(2000, 1, 1) + datetime.timedelta(days=rng.randrange(9000)),
+        lambda: datetime.datetime(2020, 5, 6, 7, 8, 9, rng.randrange(10**6)),
+        lambda: Blob(rng.randrange(100)),
+    ]
+    inner = lambda: _mixed_value(rng, depth + 1)  # noqa: E731
+    nests = [
+        lambda: [inner() for _ in range(rng.randrange(4))],
+        lambda: tuple(inner() for _ in range(rng.randrange(4))),
+        lambda: {leaves[rng.randrange(1, 6)](): inner() for _ in range(rng.randrange(3))},
+        lambda: OrderedDict((f"k{i}", inner()) for i in range(rng.randrange(3))),
+        lambda: defaultdict(list, {"a": inner()}),
+    ]
+    kinds = leaves + nests if depth < 3 else leaves
+    return kinds[rng.randrange(len(kinds))]()
+
+
+def _typed(x):
+    """x with every value's exact type spelled out, so equality also
+    compares list vs tuple, dict vs OrderedDict, bool vs int."""
+    if isinstance(x, dict):
+        items = [(_typed(k), _typed(v)) for k, v in x.items()]
+        return type(x), items, getattr(x, "default_factory", None)
+    if isinstance(x, (list, tuple)):
+        return type(x), [_typed(v) for v in x]
+    return type(x), x
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_deserialize_parity_seeded_mixed_tags(seed):
+    ctx = default_serialization_context()
+    ctx.register_type(Blob, "my.Blob", pickle=True)
+    rng = random.Random(seed)
+    obj = [_mixed_value(rng) for _ in range(300)]
+    obj.append([[], (), {}, [None, (True, 1, 1.5, "s", b"b", {"k": [()]})]])
+    back = deserialize(serialize(obj, ctx).to_buffer(), ctx)
+    assert _typed(back) == _typed(obj)
+
+
+def test_deserialize_unknown_type_id_raises():
+    ctx = SerializationContext()
+    ctx.register_type(Blob, "my.Blob", pickle=True)
+    buf = serialize([1, {"x": [Blob(2)]}], ctx).to_buffer()
+    with pytest.raises(DeserializationCallbackError) as ei:
+        deserialize(buf, SerializationContext())
+    assert ei.value.type_id == "my.Blob"
 
 
 def test_unregistered_type_raises():

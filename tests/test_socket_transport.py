@@ -1,6 +1,8 @@
 """Socket stream transport (SURVEY §2.1 EchoServer row; reference
 java/tools/.../EchoServer.java)."""
 
+import sys
+
 import pyarrow as pa
 import pytest
 
@@ -35,6 +37,21 @@ def test_echo_multiple_connections(table):
         for _ in range(3):
             assert echo_roundtrip(table, srv.host, srv.port).equals(table)
         assert srv.batches_echoed >= 3
+
+
+def test_echo_counted_before_reply(table):
+    """A client that has read its echo sees its batch counted.  A tiny
+    GIL switch interval lets the client thread run between the server's
+    reply and any later step of its handler."""
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with EchoServer() as srv:
+            for i in range(1, 1001):
+                echo_roundtrip(table, srv.host, srv.port)
+                assert srv.batches_echoed == i
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_echo_multi_batch_stream():

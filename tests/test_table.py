@@ -75,6 +75,39 @@ def test_batches_roundtrip(spark):
     assert t2.equals(t)
 
 
+@pytest.mark.parametrize("entry", ["from_pandas", "from_batches"])
+def test_ingest_above_one_batch_ships_arrow_partitions(spark, entry):
+    """Above one Arrow batch of rows, Table's pandas and batch ingest
+    land one batch per partition with no LocalRelation; values and the
+    session conf come through unchanged."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from apache_arrow_spark.session import compute_parallelism
+
+    n = 2 * int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")) + 1
+    src = pa.table(
+        {
+            "id": pa.array(range(n), pa.int64()),
+            "d": pa.array(
+                [None if i % 9 == 0 else Decimal(i).scaleb(-2) for i in range(n)],
+                pa.decimal128(10, 2),
+            ),
+            "s": pa.array([None if i % 4 == 0 else f"v{i}" for i in range(n)]),
+        }
+    )
+    before = spark.conf.getAll
+    if entry == "from_pandas":
+        t = Table.from_pandas(spark, src.to_pandas())
+    else:
+        t = Table.from_batches(spark, src.to_batches(max_chunksize=n // 3))
+    assert spark.conf.getAll == before
+    assert "LocalRelation" not in t.df._jdf.queryExecution().optimizedPlan().toString()
+    assert t.df.rdd.getNumPartitions() == compute_parallelism(spark)
+    assert t.df.toArrow().sort_by("id").to_pylist() == src.to_pylist()
+
+
 def test_equals_and_validate(spark):
     a = _t(spark)
     b = _t(spark)
