@@ -27,49 +27,18 @@ from apache_arrow_spark.functions.text import (
     shingles_of_normalized,
     tokens,
 )
+from apache_arrow_spark.session import (
+    BROADCAST_ROW_LIMIT,
+    free_local_checkpoint,
+    measure_and_reroot,
+    observed_long,
+)
 
 # xor-fold constants: a fixed seeded set of 64-bit masks; h_j(s) = h(s) XOR
 # R[j] is a family of bijections over int64 — the standard cheap stand-in for
 # MinHash permutations.
 _rng = random.Random(0xA44)
 XOR_MASKS = [_rng.getrandbits(63) for _ in range(64)]
-
-# One policy for "small enough to broadcast after measuring": used by the
-# verify stage's pair keyset and cluster_assignments' component join-back
-# so the two sites can never drift apart.
-BROADCAST_ROW_LIMIT = 1 << 20
-
-# Below this measured cardinality the candidate pair table's lineage is
-# TRUNCATED (r10 verdict #1): localCheckpoint re-roots the already-cached
-# frame as a LogicalRDD over its in-memory blocks (one cheap JVM job over
-# the cache — no Python round-trip, no recompute), so every downstream
-# action (pair keyset, shingle semi-join scope, both verify join sides,
-# the returned result) analyzes a tiny plan instead of re-walking the full
-# candidate lineage (~400 kB formatted for q33/q140 — measured 1.6-2.6 s
-# of serial per-call driver time across the 4-6 sequential actions).
-# Fault-tolerance trade (why the signature tables do NOT get this): the
-# truncated frame is a measured-small (<= 64 Ki pairs) call-scoped
-# intermediate; losing an executor mid-verify fails the call, and
-# re-running the call costs less than the per-call analysis tax the full
-# lineage charges every action.  (A collect+createDataFrame re-root was
-# tried first and REVERTED: classic PySpark parallelizes local data into
-# a 32-slice Python RDD, so every consumer re-ran Python deserialization
-# tasks and planned SMJs off unknown stats — measured q140 2.13 s -> 4.3 s
-# of stage time.)
-LOCAL_PAIR_LIMIT = 1 << 16
-
-
-def _reroot_small(candidates: DataFrame) -> DataFrame:
-    """Lineage-truncate a measured-small, already-persisted pair frame
-    (see LOCAL_PAIR_LIMIT).  Returns the LogicalRDD-rooted twin and drops
-    the original cache pin; callers release the checkpoint blocks with
-    ``session.free_local_checkpoint`` when done."""
-    # coalesce(1) first: the frame is measured-small, and a single-block
-    # checkpoint makes every downstream distinct/broadcast build a
-    # one-task job instead of shuffle.partitions near-empty tasks
-    cp = candidates.coalesce(1).localCheckpoint(eager=True)
-    candidates.unpersist()
-    return cp
 
 
 def _compute_parallelism(df: DataFrame) -> int:
@@ -96,12 +65,28 @@ HOT_BUCKET_TOP_K = 10_000  # driver-side hot-key list stays bounded
 N_BUCKET_SALTS = 16
 
 
+def _salt_pair(hot: Column, id_col: Column) -> tuple[Column, Column]:
+    """(a-side salt, exploded b-side salt) of the hot-key split: on a hot
+    key the a-side takes one of N_BUCKET_SALTS sub-keys derived from its
+    id while the b-side replicates to all of them, so each qualifying pair
+    still matches EXACTLY once; cold keys ride salt 0 on both sides."""
+    zero = F.lit(0).cast("bigint")
+    a = F.when(
+        hot, F.pmod(F.xxhash64(id_col, F.lit(0x5317)), F.lit(N_BUCKET_SALTS))
+    ).otherwise(zero)
+    b = F.explode(
+        F.when(
+            hot, F.sequence(zero, F.lit(N_BUCKET_SALTS - 1).cast("bigint"))
+        ).otherwise(F.array(zero))
+    )
+    return a, b
+
+
 def _bucket_self_join_pairs(
     bucketed: DataFrame,
     key_cols: list,
     carry_cols: tuple = (),
     hot_rows: int = HOT_BUCKET_ROWS,
-    n_salts: int = N_BUCKET_SALTS,
     distinct: bool = True,
     hot_precheck: DataFrame | None = None,
 ) -> DataFrame:
@@ -129,8 +114,8 @@ def _bucket_self_join_pairs(
     the 10^4-near-identical-docs pathology, where one join key makes a
     single task emit m^2/2 pairs — join on an extra salt sub-key: the
     a-side's salt is derived from its id, the b-side explodes all
-    ``n_salts`` values, so each qualifying pair still matches EXACTLY
-    once while no task emits more than ~m^2/n_salts of the flood.
+    N_BUCKET_SALTS values, so each qualifying pair still matches EXACTLY
+    once while no task emits more than ~m^2/N_BUCKET_SALTS of the flood.
     Cold-bucket rows there ride salt 0 on both sides; no driver-side
     key list, no cap on how many buckets may run hot."""
     out_a = [F.col("a.id").alias("id_a")] + [
@@ -153,22 +138,9 @@ def _bucket_self_join_pairs(
         pairs = a.join(b, cond).select(*out_a, *out_b)
         return pairs.dropDuplicates(["id_a", "id_b"]) if distinct else pairs
     tagged = bucketed.join(sizes, key_cols)
-    hot = F.col("__n") >= F.lit(hot_rows)
-    zero = F.array(F.lit(0).cast("bigint"))
-    a = tagged.withColumn(
-        "__salt",
-        F.when(
-            hot, F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(n_salts))
-        ).otherwise(F.lit(0).cast("bigint")),
-    ).alias("a")
-    b = tagged.withColumn(
-        "__salt",
-        F.explode(
-            F.when(
-                hot, F.sequence(F.lit(0).cast("bigint"), F.lit(n_salts - 1).cast("bigint"))
-            ).otherwise(zero)
-        ),
-    ).alias("b")
+    salt_a, salt_b = _salt_pair(F.col("__n") >= F.lit(hot_rows), F.col("id"))
+    a = tagged.withColumn("__salt", salt_a).alias("a")
+    b = tagged.withColumn("__salt", salt_b).alias("b")
     cond = (F.col("a.__salt") == F.col("b.__salt")) & (F.col("a.id") < F.col("b.id"))
     for k in key_cols:
         cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
@@ -226,6 +198,144 @@ def minhash_signatures(
     return hashed.groupBy("id").agg(*mins)
 
 
+def _band_keys(sig_arr: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bucket) LSH band keys of an (id, sig) signature table:
+    one row per band, the bucket a hash of the band's rows."""
+    rows_per_band = num_hashes // bands
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            # multi-arg xxhash64 over the band's raw longs — no casts, no
+            # string concat; a far smaller codegen'd expression tree
+            F.xxhash64(
+                *[
+                    F.element_at("sig", b * rows_per_band + j + 1)
+                    for j in range(rows_per_band)
+                ]
+            ).alias("bucket"),
+        )
+        for b in range(bands)
+    ]
+    return sig_arr.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
+        "id", "bb.band", "bb.bucket"
+    )
+
+
+def _estimate_prune(
+    raw: DataFrame,
+    sig_a: DataFrame,
+    sig_b: DataFrame,
+    a: str,
+    b: str,
+    num_hashes: int,
+    jaccard_threshold: float,
+    est_margin: float | None,
+) -> DataFrame:
+    """Persisted (a, b) candidates of ``raw`` whose signature-estimate
+    Jaccard — the matched-component fraction of the two (id, sig) arrays
+    — reaches ``jaccard_threshold - est_margin`` (default margin 4 sigma
+    of the estimate, see minhash_near_duplicates)."""
+    if est_margin is None:
+        est_margin = 4.0 * (
+            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
+        )
+    # The sig sides are id-keyed joins Spark broadcasts when small; at
+    # corpus scale they shuffle on id — the same key the candidates already
+    # carry.  zip_with/aggregate over num_hashes longs per pair, codegen'd.
+    est = (
+        F.aggregate(
+            F.zip_with(
+                F.col("sa"), F.col("sb"), lambda x, y: F.when(x == y, 1).otherwise(0)
+            ),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        / F.lit(float(num_hashes))
+    )
+    return (
+        raw.join(sig_a.select(F.col("id").alias(a), F.col("sig").alias("sa")), a)
+        .join(sig_b.select(F.col("id").alias(b), F.col("sig").alias("sb")), b)
+        .filter(est >= F.lit(max(jaccard_threshold - est_margin, 0.0)))
+        .select(a, b)
+        .persist()
+    )
+
+
+def _shingle_sets(
+    df: DataFrame, ids: DataFrame, text_col: str, id_col: str, k: int, n_pairs: int
+) -> DataFrame:
+    """Persisted (id, sh, ls) hashed shingle sets of the ``df`` docs in
+    ``ids`` (left-semi scope) for exact verification of ``n_pairs``
+    measured candidates."""
+    # size the verify stage by the MEASURED candidate cardinality (known,
+    # since candidates just materialized), not the corpus: ~512 docs per
+    # partition, capped at cluster parallelism.  A corpus-width repartition
+    # here would spread a few hundred candidate docs over empty tasks whose
+    # scheduling dominates; a huge candidate set still fans out fully.
+    verify_part = max(1, min(_compute_parallelism(df), (2 * n_pairs) // 512 + 1))
+    # Shingle sets are HASHED to int64 before the pair joins: Jaccard over
+    # distinct xxhash64 values equals Jaccard over the distinct shingle
+    # strings (a collision within one pair's ~2k-element union has
+    # probability ~k^2/2^65 — immaterial even over millions of pairs), and
+    # long-array intersection is ~8x cheaper than UTF8 string intersection
+    # while the join intermediates shrink ~2.5x (8 bytes vs 5-char strings).
+    return (
+        df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
+        .join(ids, on="id", how="left_semi")
+        .repartition(verify_part, F.col("id"))
+        .select(
+            "id",
+            F.transform(
+                shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
+            ).alias("sh"),
+        )
+        .select("id", "sh", F.size("sh").alias("ls"))
+        .persist()
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    a: str,
+    b: str,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Exact Jaccard verify of the (a, b) candidate pairs against the two
+    sides' shingle sets; returns the persisted, materialized
+    (a, b, jaccard >= threshold) result."""
+    pairs = (
+        cand.join(
+            sh_a.select(F.col("id").alias(a), F.col("sh").alias("sh_a"), F.col("ls").alias("la")),
+            a,
+        )
+        .join(
+            sh_b.select(F.col("id").alias(b), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")),
+            b,
+        )
+        # threshold length prune before any intersection work: J >= t
+        # forces min(|a|,|b|) >= t * max(|a|,|b|) (|a∩b| <= min, |a∪b| >=
+        # max) — a cheap integer predicate Catalyst evaluates ahead of the
+        # jaccard projection, so pruned pairs never pay the array ops.
+        .filter(
+            (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
+            & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
+        )
+    )
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
+    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+    result = (
+        pairs.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select(a, b, "jaccard")
+        .persist()
+    )
+    result.count()
+    return result
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -263,11 +373,6 @@ def minhash_near_duplicates(
     heavyweight intermediates are unpersisted before returning.  Callers
     holding the result long-term may ``.unpersist()`` it when done.
     """
-    rows_per_band = num_hashes // bands
-    if est_margin is None:
-        est_margin = 4.0 * (
-            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
-        )
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k)
     # persist the signature ARRAY once: it feeds band-bucket generation
     # (both sides of the self-join) and the estimate prune.  num_hashes
@@ -282,25 +387,9 @@ def minhash_near_duplicates(
     sig_arr = sig.select(
         "id", F.array(*[F.col(f"m{j}") for j in range(num_hashes)]).alias("sig")
     ).persist()
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            # multi-arg xxhash64 over the band's raw longs — no casts, no
-            # string concat; a far smaller codegen'd expression tree
-            F.xxhash64(
-                *[
-                    F.element_at("sig", b * rows_per_band + j + 1)
-                    for j in range(rows_per_band)
-                ]
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
     # banded derives from the cached signature arrays — the explode is
     # cheap to recompute per consumer, no second persist needed
-    banded = sig_arr.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "id", "bb.band", "bb.bucket"
-    )
+    banded = _band_keys(sig_arr, num_hashes, bands)
 
     # skew-balanced candidate generation: plain (band, bucket) equi-join
     # until a bucket crosses HOT_BUCKET_ROWS, salted sub-keys beyond (the
@@ -308,45 +397,24 @@ def minhash_near_duplicates(
     raw_candidates = _bucket_self_join_pairs(
         banded, ["band", "bucket"], hot_rows=hot_bucket_rows
     )
-    # estimate prune: matched-component fraction of the two signatures.
-    # The sig_arr sides are id-keyed joins Spark broadcasts when small; at
-    # corpus scale they shuffle on id — the same key the candidates already
-    # carry.  zip_with/aggregate over num_hashes longs per pair, codegen'd.
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sa"), F.col("sb"), lambda x, y: F.when(x == y, 1).otherwise(0)
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        / F.lit(float(num_hashes))
-    )
     # surviving candidates are persisted: they feed the semi-join that
     # scopes shingle computation AND both sides of the verify join — tiny
-    # (two longs/pair)
-    candidates = (
-        raw_candidates.join(
-            sig_arr.select(F.col("id").alias("id_a"), F.col("sig").alias("sa")), "id_a"
+    # (two longs/pair); the measuring count is eager for the same reason
+    candidates, n_pairs = measure_and_reroot(
+        _estimate_prune(
+            raw_candidates, sig_arr, sig_arr, "id_a", "id_b",
+            num_hashes, jaccard_threshold, est_margin,
         )
-        .join(sig_arr.select(F.col("id").alias("id_b"), F.col("sig").alias("sb")), "id_b")
-        .filter(est >= F.lit(max(jaccard_threshold - est_margin, 0.0)))
-        .select("id_a", "id_b")
-        .persist()
     )
-    n_pairs = candidates.count()  # eager for the same reason
     # The candidate cardinality is now MEASURED, so the verify topology can
     # be chosen exactly (runtime adaptivity with better information than
     # AQE's byte estimates): a small candidate set broadcasts — the verify
     # joins collapse into one shuffle-free stage — while a huge one (mega-
-    # bucket corpora) keeps the scale-safe shuffle equi-join.
-    bcast_cand = n_pairs <= (1 << 21)
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small pair set (LOCAL_PAIR_LIMIT):
-        # every later action analyzes a tiny LogicalRDD plan instead of
-        # the full banded-signature lineage — the q33 serial driver share.
-        candidates = _reroot_small(candidates)
+    # bucket corpora) keeps the scale-safe shuffle equi-join.  A measured-
+    # small set is also lineage-truncated (LOCAL_PAIR_LIMIT): every later
+    # action analyzes a tiny LogicalRDD plan instead of the full banded-
+    # signature lineage — the q33 serial driver share.
+    bcast_cand = n_pairs <= BROADCAST_ROW_LIMIT
     cand_join = F.broadcast(candidates) if bcast_cand else candidates
     # shingle sets for exact verification — computed ONLY for docs that
     # appear in a candidate pair (left-semi on the candidate id set).  At
@@ -360,80 +428,22 @@ def minhash_near_duplicates(
     )
     if bcast_cand:
         cand_ids = F.broadcast(cand_ids)
-    # size the verify stage by the MEASURED candidate cardinality (known,
-    # since candidates just materialized), not the corpus: ~512 docs per
-    # partition, capped at cluster parallelism.  A corpus-width repartition
-    # here would spread a few hundred candidate docs over empty tasks whose
-    # scheduling dominates; a huge candidate set still fans out fully.
-    verify_part = max(1, min(_compute_parallelism(df), (2 * n_pairs) // 512 + 1))
-    # Shingle sets are HASHED to int64 before the pair joins: Jaccard over
-    # distinct xxhash64 values equals Jaccard over the distinct shingle
-    # strings (a collision within one pair's ~2k-element union has
-    # probability ~k^2/2^65 — immaterial even over millions of pairs), and
-    # long-array intersection is ~8x cheaper than UTF8 string intersection
-    # while the join intermediates shrink ~2.5x (8 bytes vs 5-char strings).
-    sh_df = (
-        df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-        .join(cand_ids, on="id", how="left_semi")
-        .repartition(verify_part, F.col("id"))
-        .select(
-            "id",
-            F.transform(
-                shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-            ).alias("sh"),
-        )
-        .select("id", "sh", F.size("sh").alias("ls"))
-        .persist()
-    )
+    sh_df = _shingle_sets(df, cand_ids, text_col, id_col, k, n_pairs)
     # eager: consumed by both sides of the verify join.  (r11 A/B: folding
     # this materialization into the verify job measured control-corrected
     # NEUTRAL warm — 2.75 s eager vs 2.67 s folded with a 1.2x-drifting
     # control — and risks concurrent-stage cache materialization stalls,
     # so the eager count stays.)
     sh_df.count()
-    pairs = (
-        cand_join.join(
-            sh_df.select(
-                F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-            ),
-            "id_a",
-        )
-        .join(
-            sh_df.select(
-                F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("ls").alias("lb")
-            ),
-            "id_b",
-        )
-        # threshold length prune before any intersection work: J >= t
-        # forces min(|a|,|b|) >= t * max(|a|,|b|) (|a∩b| <= min, |a∪b| >=
-        # max) — a cheap integer predicate Catalyst evaluates ahead of the
-        # jaccard projection, so pruned pairs never pay the array ops.
-        .filter(
-            (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
-            & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    result = (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
     # materialize the (tiny) verified pairs, then drop the intermediate
     # caches — a long-lived session would otherwise leak block-manager
     # memory on every call
-    result = result.persist()
-    result.count()
+    result = _verify_jaccard(
+        cand_join, sh_df, sh_df, "id_a", "id_b", jaccard_threshold
+    )
     for c in (sig_arr, sh_df):
         c.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
-    else:
-        candidates.unpersist()
+    free_local_checkpoint(candidates) or candidates.unpersist()
     return result
 
 
@@ -482,11 +492,6 @@ def minhash_near_duplicates_against(
     estimate prune (4-sigma margin) → exact Jaccard verify on shingle
     sets, semi-join-scoped to candidates on BOTH sides.
     """
-    rows_per_band = num_hashes // bands
-    if est_margin is None:
-        est_margin = 4.0 * (
-            (jaccard_threshold * (1.0 - jaccard_threshold) / num_hashes) ** 0.5
-        )
     new_sig = minhash_sig_array(new_df, text_col, id_col, num_hashes, k).persist()
     new_sig.count()
     # Only persist/unpersist signature stores WE derived: a caller-supplied
@@ -501,23 +506,6 @@ def minhash_near_duplicates_against(
         # and doubles as the materialization (the q33 discipline)
         corpus_sig = corpus_sig.persist()
 
-    def banded(sig_arr: DataFrame) -> DataFrame:
-        structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.element_at("sig", b * rows_per_band + j + 1)
-                        for j in range(rows_per_band)
-                    ]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-        return sig_arr.select("id", F.explode(F.array(*structs)).alias("bb")).select(
-            "id", "bb.band", "bb.bucket"
-        )
-
     # skew-balanced batch-vs-corpus candidate join (the asymmetric twin
     # of _bucket_self_join_pairs' conditional salting, r9 verdict #5): a
     # corpus bucket holding >= HOT_BUCKET_ROWS docs — the boilerplate
@@ -527,7 +515,7 @@ def minhash_near_duplicates_against(
     # cold buckets ride salt 0 on both sides, preserving the plain
     # equi-join.  Hotness comes from a map-side-combined count over the
     # corpus band keys — the side whose membership drives the blowup.
-    cb = banded(corpus_sig)
+    cb = _band_keys(corpus_sig, num_hashes, bands)
     bsizes = cb.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
     bhot = F.col("__n") >= F.lit(hot_bucket_rows)
     # bounded existence check first (the _bucket_self_join_pairs
@@ -535,7 +523,7 @@ def minhash_near_duplicates_against(
     # keeps the exact plain equi-join; bsizes aggregates off the cached
     # signature store, so the check is one small job
     if bsizes.filter(bhot).limit(1).count() == 0:
-        n, c = banded(new_sig).alias("n"), cb.alias("c")
+        n, c = _band_keys(new_sig, num_hashes, bands).alias("n"), cb.alias("c")
         raw = (
             n.join(
                 c,
@@ -546,35 +534,15 @@ def minhash_near_duplicates_against(
             .dropDuplicates(["new_id", "corpus_id"])
         )
     else:
+        salt_n, salt_c = _salt_pair(bhot, F.col("id"))
         nb = (
-            banded(new_sig)
+            _band_keys(new_sig, num_hashes, bands)
             .join(bsizes, ["band", "bucket"])  # inner: keys absent from the
             # corpus have no match anyway, so dropping them is a free prune
-            .withColumn(
-                "__salt",
-                F.when(
-                    bhot,
-                    F.pmod(F.xxhash64(F.col("id"), F.lit(0x5317)), F.lit(N_BUCKET_SALTS)),
-                ).otherwise(F.lit(0).cast("bigint")),
-            )
+            .withColumn("__salt", salt_n)
             .alias("n")
         )
-        cbs = (
-            cb.join(bsizes, ["band", "bucket"])
-            .withColumn(
-                "__salt",
-                F.explode(
-                    F.when(
-                        bhot,
-                        F.sequence(
-                            F.lit(0).cast("bigint"),
-                            F.lit(N_BUCKET_SALTS - 1).cast("bigint"),
-                        ),
-                    ).otherwise(F.array(F.lit(0).cast("bigint")))
-                ),
-            )
-            .alias("c")
-        )
+        cbs = cb.join(bsizes, ["band", "bucket"]).withColumn("__salt", salt_c).alias("c")
         raw = (
             nb.join(
                 cbs,
@@ -585,121 +553,32 @@ def minhash_near_duplicates_against(
             .select(F.col("n.id").alias("new_id"), F.col("c.id").alias("corpus_id"))
             .dropDuplicates(["new_id", "corpus_id"])
         )
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sa"), F.col("sb"), lambda x, y: F.when(x == y, 1).otherwise(0)
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
+    candidates, n_pairs = measure_and_reroot(
+        _estimate_prune(
+            raw, new_sig, corpus_sig, "new_id", "corpus_id",
+            num_hashes, jaccard_threshold, est_margin,
         )
-        / F.lit(float(num_hashes))
     )
-    candidates = (
-        raw.join(new_sig.select(F.col("id").alias("new_id"), F.col("sig").alias("sa")), "new_id")
-        .join(
-            corpus_sig.select(F.col("id").alias("corpus_id"), F.col("sig").alias("sb")),
-            "corpus_id",
-        )
-        .filter(est >= F.lit(max(jaccard_threshold - est_margin, 0.0)))
-        .select("new_id", "corpus_id")
-        .persist()
-    )
-    n_pairs = candidates.count()
-    bcast = n_pairs <= (1 << 21)
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small candidate set (the
-        # minhash_near_duplicates discipline — see LOCAL_PAIR_LIMIT)
-        candidates = _reroot_small(candidates)
+    bcast = n_pairs <= BROADCAST_ROW_LIMIT
     new_ids = candidates.select(F.col("new_id").alias("id")).distinct()
     cor_ids = candidates.select(F.col("corpus_id").alias("id")).distinct()
     cand_join = F.broadcast(candidates) if bcast else candidates
-    verify_part = max(1, min(_compute_parallelism(new_df), (2 * n_pairs) // 512 + 1))
-
-    def shingle_sets(df: DataFrame, ids: DataFrame) -> DataFrame:
-        ids = F.broadcast(ids) if bcast else ids
-        return (
-            df.select(F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("t"))
-            .join(ids, on="id", how="left_semi")
-            .repartition(verify_part, F.col("id"))
-            .select(
-                "id",
-                F.transform(
-                    shingles_of_normalized(F.col("t"), k), lambda s: F.xxhash64(s)
-                ).alias("sh"),
-            )
-            .select("id", "sh", F.size("sh").alias("ls"))
-            .persist()
-        )
-
-    sh_new = shingle_sets(new_df, new_ids)
-    sh_cor = shingle_sets(corpus_df, cor_ids)
+    if bcast:
+        new_ids, cor_ids = F.broadcast(new_ids), F.broadcast(cor_ids)
+    sh_new = _shingle_sets(new_df, new_ids, text_col, id_col, k, n_pairs)
+    sh_cor = _shingle_sets(corpus_df, cor_ids, text_col, id_col, k, n_pairs)
     sh_new.count()
     sh_cor.count()
-    pairs = (
-        cand_join.join(
-            sh_new.select(
-                F.col("id").alias("new_id"), F.col("sh").alias("sh_a"), F.col("ls").alias("la")
-            ),
-            "new_id",
-        )
-        .join(
-            sh_cor.select(
-                F.col("id").alias("corpus_id"),
-                F.col("sh").alias("sh_b"),
-                F.col("ls").alias("lb"),
-            ),
-            "corpus_id",
-        )
-        .filter(
-            (F.col("la") >= F.lit(jaccard_threshold) * F.col("lb"))
-            & (F.col("lb") >= F.lit(jaccard_threshold) * F.col("la"))
-        )
+    result = _verify_jaccard(
+        cand_join, sh_new, sh_cor, "new_id", "corpus_id", jaccard_threshold
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    result = (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "corpus_id", "jaccard")
-        .persist()
-    )
-    result.count()
     internal_caches = [new_sig, sh_new, sh_cor]
-    if not local_cand:
-        internal_caches.append(candidates)
     if corpus_sig_is_internal:
         internal_caches.append(corpus_sig)
     for cch in internal_caches:
         cch.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
+    free_local_checkpoint(candidates) or candidates.unpersist()
     return result
-
-
-def _observed_changed(obs, timeout_s: float = 10.0):
-    """Bounded read of the fixpoint Observation: polls the JVM promise
-    (``getRowOrEmpty`` waits ~100 ms per call) up to ``timeout_s``, then
-    returns None so the caller can fall back to an explicit count job —
-    the blocking ``obs.get`` has no timeout and the listener bus that
-    fulfils it can drop events under load (r10 ADVICE)."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    try:
-        while _time.monotonic() < deadline:
-            row_opt = obs._jo.getRowOrEmpty()
-            if row_opt.isDefined():
-                r = row_opt.get()
-                return int(r.getLong(r.fieldIndex("changed")))
-            _time.sleep(0.05)  # getRowOrEmpty's own wait is bounded
-    except Exception:
-        return None
-    return None
 
 
 def connected_components(
@@ -781,7 +660,7 @@ def connected_components(
                 F.lit(0),
             ).alias("changed"),
         ).localCheckpoint(eager=True)
-        changed = _observed_changed(obs)
+        changed = observed_long(obs, "changed", 10.0)
         if changed is None:
             # metrics ride Spark's async listener bus, which can drop
             # SQLExecutionEnd events under load — a blocking obs.get could
@@ -1010,18 +889,14 @@ def _verify_pairs(
     only candidate docs; ``score`` is any expression over the candidate
     columns plus ``inter``.  Unpersists ``cells`` and ``candidates``;
     returns the persisted (id_a, id_b, score_col) result."""
-    n_pairs = candidates.count()
-    local_cand = n_pairs <= LOCAL_PAIR_LIMIT
-    if local_cand:
-        # lineage-truncate the measured-small candidate set (see
-        # LOCAL_PAIR_LIMIT): the pair keyset, both semi-join id scopes and
-        # the final score join then hang off a tiny LogicalRDD plan
-        # instead of re-analyzing the candidate lineage per action (the
-        # q140/q143 driver share, r10 verdict #5).  The LogicalRDD has no
-        # size statistics, so the small-side broadcasts below are hinted
-        # explicitly off the measured count — the same physical joins the
-        # cached frame's accurate stats used to produce.
-        candidates = _reroot_small(candidates)
+    # a measured-small candidate set is lineage-truncated: the pair keyset,
+    # both semi-join id scopes and the final score join then hang off a
+    # tiny LogicalRDD plan instead of re-analyzing the candidate lineage
+    # per action (the q140/q143 driver share, r10 verdict #5).  The
+    # LogicalRDD has no size statistics, so the small-side broadcasts
+    # below are hinted explicitly off the measured count — the same
+    # physical joins the cached frame's accurate stats used to produce.
+    candidates, n_pairs = measure_and_reroot(candidates)
     small = n_pairs <= BROADCAST_ROW_LIMIT
     pair_keys = candidates.select("id_a", "id_b")
     ids_a = candidates.select(F.col("id_a").alias("id")).distinct()
@@ -1047,12 +922,7 @@ def _verify_pairs(
     )
     out.count()
     cells.unpersist()
-    if local_cand:
-        from apache_arrow_spark.session import free_local_checkpoint
-
-        free_local_checkpoint(candidates)
-    else:
-        candidates.unpersist()
+    free_local_checkpoint(candidates) or candidates.unpersist()
     return out
 
 
@@ -1336,31 +1206,12 @@ def shingle_containment_pairs(
                 [(g,) for g in hot_grams], "gram bigint"
             ).withColumn("__hot", F.lit(1))
         )
-        ghot = F.col("__hot").isNotNull()
+        salt_a, salt_b = _salt_pair(F.col("__hot").isNotNull(), F.col("id_a"))
         ap = a_probe.join(marker, "gram", "left").select(
-            "id_a",
-            "la",
-            "pl",
-            "gram",
-            F.when(
-                ghot,
-                F.pmod(F.xxhash64(F.col("id_a"), F.lit(0x5317)), F.lit(N_BUCKET_SALTS)),
-            )
-            .otherwise(F.lit(0).cast("bigint"))
-            .alias("__salt"),
+            "id_a", "la", "pl", "gram", salt_a.alias("__salt")
         )
         bi = b_index.join(marker, "gram", "left").select(
-            "id_b",
-            "lb",
-            "gram",
-            F.explode(
-                F.when(
-                    ghot,
-                    F.sequence(
-                        F.lit(0).cast("bigint"), F.lit(N_BUCKET_SALTS - 1).cast("bigint")
-                    ),
-                ).otherwise(F.array(F.lit(0).cast("bigint")))
-            ).alias("__salt"),
+            "id_b", "lb", "gram", salt_b.alias("__salt")
         )
         joined = ap.join(bi, ["gram", "__salt"])
     # exact hit-count bound: hits within the probe >= ceil(t*la) - (la - pl)

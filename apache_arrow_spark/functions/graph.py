@@ -20,13 +20,24 @@ Scale + determinism discipline:
 - lineage is truncated per round with ``localCheckpoint`` (the
   connected-components lesson: Catalyst re-analysis otherwise grows with
   nesting depth).  On a fault-tolerant cluster swap for ``checkpoint()``
-  on reliable storage.
+  on reliable storage;
+- measured gates use session.py's shared primitives: the bounded
+  Observation read (``observed_long``), the broadcast limit
+  (``BROADCAST_ROW_LIMIT``) and checkpoint release
+  (``free_local_checkpoint``), the same ones connected components uses.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from apache_arrow_spark.session import (
+    BROADCAST_ROW_LIMIT,
+    compute_parallelism,
+    free_local_checkpoint,
+    observed_long,
+)
 
 
 def pagerank(
@@ -185,8 +196,6 @@ def bfs_khop(
     is static; each round is localCheckpointed to keep lineage flat
     (the q79 connected-components discipline) and the superseded
     round's blocks are freed eagerly (the q78 lesson)."""
-    from apache_arrow_spark.session import compute_parallelism, free_local_checkpoint
-
     spark = edges.sparkSession
     und = (
         edges.select(F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b"))
@@ -219,7 +228,7 @@ def bfs_khop(
         )
         anti_side = (
             F.broadcast(dist)
-            if n_dist is not None and n_dist <= 1 << 20
+            if n_dist is not None and n_dist <= BROADCAST_ROW_LIMIT
             else dist
         )
         new_nodes = (
@@ -239,26 +248,7 @@ def bfs_khop(
         frontier = merged.filter(F.col("dist") == hop)
         free_local_checkpoint(dist)
         dist = merged
-        n_dist = _observed_count(obs)
+        n_dist = observed_long(obs, "n", 5.0)
     und.unpersist()
     return dist
 
-
-def _observed_count(obs, timeout_s: float = 5.0):
-    """Bounded read of a row-count Observation (metric ``n``): polls the
-    JVM promise up to ``timeout_s`` and returns None when the metric never
-    arrives (dropped listener event) — the caller then simply skips the
-    broadcast hint, which is always safe."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    try:
-        while _time.monotonic() < deadline:
-            row_opt = obs._jo.getRowOrEmpty()
-            if row_opt.isDefined():
-                r = row_opt.get()
-                return int(r.getLong(r.fieldIndex("n")))
-            _time.sleep(0.05)
-    except Exception:
-        return None
-    return None

@@ -391,14 +391,14 @@ def test_observed_changed_bounded_wait_returns_none_without_action(spark):
     from pyspark.sql import Observation
     import pyspark.sql.functions as F
 
-    from apache_arrow_spark.functions.dedup import _observed_changed
+    from apache_arrow_spark.session import observed_long
 
     obs = Observation()
     df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("changed"))
     # deliberately NO action on df: the promise never completes
     t0 = time.monotonic()
-    assert _observed_changed(obs, timeout_s=0.5) is None
+    assert observed_long(obs, "changed", timeout_s=0.5) is None
     assert time.monotonic() - t0 < 5.0
     # after the action runs, the same observation resolves to the metric
     df.write.format("noop").mode("overwrite").save()
-    assert _observed_changed(obs, timeout_s=10.0) == 10
+    assert observed_long(obs, "changed", timeout_s=10.0) == 10

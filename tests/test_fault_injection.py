@@ -155,3 +155,44 @@ def test_bfs_khop_chaos(spark, chain_pairs):
     )
     assert n_ok + n_loud == 4
     assert drops > 0, "chaos thread never dropped a block — test is vacuous"
+
+
+def test_graph_fixpoints_exact_without_observed_metrics(spark, chain_pairs, monkeypatch):
+    """With every Observation read failing (``observed_long`` -> None, the
+    dropped-listener-event case), connected_components must reach the
+    exact labels through its explicit-count fallback, and bfs_khop the
+    exact distances with no found-set broadcast hint past the first hop
+    (whose found set is the seed list, sized without observing)."""
+    from apache_arrow_spark.functions import dedup, graph
+
+    def bfs():
+        return _sorted_rows(
+            graph.bfs_khop(chain_pairs, seeds=[0], max_hops=25, src_col="id_a", dst_col="id_b")
+        )
+
+    real_broadcast = F.broadcast
+    hints = []
+
+    def counting_broadcast(df):
+        hints.append(df)
+        return real_broadcast(df)
+
+    monkeypatch.setattr(F, "broadcast", counting_broadcast)
+    expected_cc = _sorted_rows(dedup.connected_components(chain_pairs))
+    expected_bfs = bfs()
+    assert len(hints) > 1  # observed found-set size: hinted past hop 1
+
+    reads = []
+
+    def unreadable(obs, name, timeout_s):
+        reads.append(name)
+        return None
+
+    monkeypatch.setattr(dedup, "observed_long", unreadable)
+    monkeypatch.setattr(graph, "observed_long", unreadable)
+    assert _sorted_rows(dedup.connected_components(chain_pairs)) == expected_cc
+    assert "changed" in reads
+    hints.clear()
+    assert bfs() == expected_bfs
+    assert "n" in reads
+    assert len(hints) == 1

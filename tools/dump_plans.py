@@ -1,7 +1,9 @@
-"""Dump .explain('formatted') for named queries to plans/<tag>/<query>_<suffix>.txt.
+"""Dump .explain('formatted') for named queries to plans/<round>/<query>_<suffix>.txt.
 
-Usage: python tools/dump_plans.py <suffix> qNN_name [qNN_name ...]
-Writes plans/r10/<query>_<suffix>.txt (the judge checks plan claims there).
+Usage: [SPARK_GRAFT_PLAN_ROUND=rNN] python tools/dump_plans.py <suffix> qNN_name [qNN_name ...]
+Writes plans/<round>/<query>_<suffix>.txt, where <round> is
+SPARK_GRAFT_PLAN_ROUND (default r11); plan claims are checked there.
+Tables come from SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata).
 """
 from __future__ import annotations
 
