@@ -1,16 +1,18 @@
 """Spark 4 Python DataSource connector for Arrow IPC shard directories.
 
-The ``io.ipc`` module reads shard dirs by parallelizing a file list into
-``mapInArrow`` tasks; this module exposes the SAME storage layout through
-Spark's first-class connector API (``pyspark.sql.datasource``, new in
-Spark 4), so the format composes with everything a registered source
-gets for free: ``spark.read.format("aas_ipc").load(dir)``, SQL
-``CREATE TABLE ... USING aas_ipc``, and catalog integration.
+``format("aas_ipc")`` reads and writes shards through Spark's first-class
+connector API (``pyspark.sql.datasource``, new in Spark 4), so the format
+composes with everything a registered source gets for free:
+``spark.read.format("aas_ipc").load(dir)``, SQL ``CREATE TABLE ... USING
+aas_ipc``, and catalog integration.  Listing, schema sniff, shard decode
+and shard write are the shard codec of ``io.ipc``; this module adds only
+the connector protocol around it.
 
 Connector anatomy (the part the reference implements in C++ readers,
 re-expressed as Spark's plugin surface):
-- ``schema()`` sniffs the first shard's IPC metadata on the driver
-  (dictionary fields decode to their dense value types — SURVEY §1.2);
+- ``schema()`` sniffs the first shard's IPC metadata on the driver,
+  reading no record batch (dictionary fields decode to their dense value
+  types — SURVEY §1.2);
 - ``partitions()`` returns one InputPartition per shard, so every shard
   is read by its own task — scan parallelism == shard count, no driver
   funnel;
@@ -20,41 +22,26 @@ re-expressed as Spark's plugin surface):
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
+import pyarrow as pa
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-
-def _shards(path: str) -> list[str]:
-    files = sorted(
-        _glob.glob(os.path.join(path, "*.arrow"))
-        + _glob.glob(os.path.join(path, "*.arrows"))
-    )
-    if not files:
-        raise FileNotFoundError(f"no IPC shards under {path}")
-    return files
+from apache_arrow_spark.io.ipc import (
+    _pickle_by_value,
+    _read_schema,
+    _read_table,
+    _shard_files,
+    _write_shard,
+)
 
 
-def _read_shard_table(path: str):
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
-
-    with open(path, "rb") as fh:
-        try:
-            table = ipc.open_file(fh).read_all()
-        except pa.ArrowInvalid:
-            fh.seek(0)
-            table = ipc.open_stream(fh).read_all()
-    # dictionary columns decode to dense (the Spark representation)
-    fields = [
-        f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
-        for f in table.schema
-    ]
-    dense = pa.schema(fields)
-    if dense != table.schema:
-        table = table.cast(dense)
-    return table
+def _landed_shards(path: str) -> list[str]:
+    """``_shard_files``, with no shard yet (or no directory yet) as []."""
+    try:
+        return _shard_files(path)
+    except FileNotFoundError:
+        return []
 
 
 class _Shard(InputPartition):
@@ -78,7 +65,7 @@ class ArrowIPCShardReader(DataSourceReader):
             flist = list(filters)
             self._keep = [
                 p
-                for p in _shards(self._path)
+                for p in _shard_files(self._path)
                 if all(
                     _shard_may_match(f, manifest.get(os.path.basename(p)))
                     for f in flist
@@ -87,12 +74,11 @@ class ArrowIPCShardReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        files = self._keep if self._keep is not None else _shards(self._path)
+        files = self._keep if self._keep is not None else _shard_files(self._path)
         return [_Shard(p) for p in files]
 
     def read(self, partition):
-        table = _read_shard_table(partition.path)
-        yield from table.to_batches()
+        yield from _read_table(partition.path).to_batches()
 
 
 class ArrowIPCDataSource(DataSource):
@@ -106,11 +92,8 @@ class ArrowIPCDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        import pyarrow as pa
-
-        first = _shards(self.options["path"])[0]
-        table = _read_shard_table(first)
-        return from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+        first = _shard_files(self.options["path"])[0]
+        return from_arrow_schema(_read_schema(first), prefer_timestamp_ntz=True)
 
     def reader(self, schema):
         return ArrowIPCShardReader(self.options["path"])
@@ -142,18 +125,16 @@ def register_ipc_source(spark) -> None:
     # would silently disable pushdown for every actual read.  It only
     # affects Python DataSources (this connector is the session's only
     # one) and never changes values, only pruning.
+    import sys
+
+    from pyspark.errors import AnalysisException
+
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
+    except AnalysisException:
         pass  # static-conf session: pushFilters simply won't be called
-    try:
-        import sys
-
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: fall back to by-reference (repo-cwd only)
+    # the codec module (io.ipc) registers itself by value on import
+    _pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(ArrowIPCDataSource)
 
 
@@ -174,29 +155,21 @@ class ArrowIPCSimpleStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self):
         return {"idx": 0}
 
-    def _rows(self, lo: int, hi: int) -> list:
+    @staticmethod
+    def _rows(files: list[str]) -> list:
         # a MATERIALIZED list, not a generator: the runner's prefetch
         # cache copy.copy()s the iterator, which generators don't support
-        try:
-            files = _shards(self._path)
-        except FileNotFoundError:
-            files = []
-        out = []
-        for p in files[lo:hi]:
-            table = _read_shard_table(p)
-            out.extend(tuple(row.values()) for row in table.to_pylist())
-        return out
+        return [
+            tuple(row.values()) for p in files for row in _read_table(p).to_pylist()
+        ]
 
     def read(self, start):
-        try:
-            n = len(_shards(self._path))
-        except FileNotFoundError:
-            n = start["idx"]
-        end = {"idx": n}
-        return self._rows(start["idx"], n), end
+        files = _landed_shards(self._path)
+        n = len(files) if files else start["idx"]
+        return self._rows(files[start["idx"] : n]), {"idx": n}
 
     def readBetweenOffsets(self, start, end):
-        return self._rows(start["idx"], end["idx"])
+        return self._rows(_landed_shards(self._path)[start["idx"] : end["idx"]])
 
     def commit(self, end):
         pass
@@ -221,19 +194,19 @@ def write_ipc_manifest(spark, path: str) -> int:
     statistics."""
     import json
 
-    files = _shards(path)
+    files = _shard_files(path)
 
     def stats(p: str):
-        table = _read_shard_table(p)
-        cols = {}
         import pyarrow.compute as pc
 
+        table = _read_table(p)
+        cols = {}
         for name in table.column_names:
             col = table.column(name)
             try:
                 mn, mx = pc.min(col).as_py(), pc.max(col).as_py()
-            except Exception:
-                continue
+            except pa.ArrowNotImplementedError:
+                continue  # list/struct/map columns have no min/max
             if mn is not None and not isinstance(mn, (bytes, dict, list)):
                 cols[name] = [mn, mx]
         return os.path.basename(p), cols
@@ -312,20 +285,10 @@ class ArrowIPCShardWriter(DataSourceArrowWriter):
     def write(self, iterator):
         import uuid
 
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
-        batches = list(iterator)
-        if not batches:
-            return _ShardCommit(None)
         os.makedirs(self._staging, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex[:16]}.arrows"
-        staged = os.path.join(self._staging, name)
-        with pa.OSFile(staged, "wb") as sink:
-            writer = ipc.new_stream(sink, batches[0].schema)
-            for b in batches:
-                writer.write_batch(b)
-            writer.close()
+        staged = os.path.join(self._staging, f"part-{uuid.uuid4().hex[:16]}.arrows")
+        if _write_shard(staged, iterator) is None:
+            return _ShardCommit(None)  # empty partition: no shard
         return _ShardCommit(staged)
 
     def commit(self, messages):
@@ -333,9 +296,7 @@ class ArrowIPCShardWriter(DataSourceArrowWriter):
 
         os.makedirs(self._path, exist_ok=True)
         if self._overwrite:
-            for old in _glob.glob(os.path.join(self._path, "*.arrows")) + _glob.glob(
-                os.path.join(self._path, "*.arrow")
-            ):
+            for old in _landed_shards(self._path):
                 os.remove(old)
             mf = os.path.join(self._path, _MANIFEST)
             if os.path.exists(mf):

@@ -13,6 +13,14 @@ through Python row objects, and nothing funnels through the driver.  The
 source distributes the *file list* and each task reads whole shards with
 pyarrow (zero-copy mmap), again via ``mapInArrow``.
 
+One private shard codec in this module knows the on-disk layout: the
+lister (``_shard_files``), the schema-only sniff (``_read_schema``), the
+dense whole-shard decode (``_read_table``, from a path or a buffer) and
+the streaming shard writer (``_write_shard``).  The ``aas_ipc`` connector
+(io/datasource.py) and ``streaming.read_ipc_stream`` read and write
+through it too; the module pickles by value so that Spark's helper
+processes run it without importing the package.
+
 Single-file mode exists for interop with external tools expecting one
 ``.arrows`` file — driver-side by necessity, documented small-data-only.
 
@@ -28,26 +36,131 @@ every distributed file sink.)
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 import glob as _glob
 import os
+import sys
 import uuid
 
+import pyarrow as pa
+import pyarrow.ipc as pa_ipc
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _shard_pattern(path: str) -> list[str]:
+def _pickle_by_value(module) -> None:
+    """Embed ``module``'s code in task and data-source pickles.  Spark's
+    Python helper processes (notably the streaming source runner) do not
+    see ``addPyFile`` shipments, so a by-REFERENCE pickle of a codec call
+    dies there with ModuleNotFoundError whenever the driver's cwd is not
+    the repo root; by value, the pickle is self-contained."""
+    from pyspark import cloudpickle
+
+    try:
+        cloudpickle.register_pickle_by_value(module)
+    except AttributeError:
+        pass  # older cloudpickle: by-reference (package must be importable)
+
+
+_pickle_by_value(sys.modules[__name__])
+
+
+def _shard_files(path: str) -> list[str]:
+    """Sorted shard paths of a directory (its ``*.arrow`` and ``*.arrows``
+    files), of a glob, or of one existing file.  Raises FileNotFoundError
+    when there is none — the streaming connector reads that as "nothing
+    landed yet"."""
     if os.path.isdir(path):
         files = sorted(
             _glob.glob(os.path.join(path, "*.arrow"))
             + _glob.glob(os.path.join(path, "*.arrows"))
         )
+    elif any(c in path for c in "*?["):
+        files = sorted(_glob.glob(path))
     else:
-        files = sorted(_glob.glob(path)) if any(c in path for c in "*?[") else [path]
+        files = [path] if os.path.isfile(path) else []
     if not files:
         raise FileNotFoundError(f"no IPC files under {path}")
     return files
+
+
+def _dense_schema(schema: pa.Schema) -> pa.Schema:
+    """Dictionary fields decode to their value type (the Spark
+    representation; SURVEY §1.2 DICTIONARY)."""
+    return pa.schema(
+        [
+            f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
+            for f in schema
+        ],
+        metadata=schema.metadata,
+    )
+
+
+def _open_shard(src):
+    """A reader over an open, seekable ``src`` in whichever wire format
+    it holds: file, else stream."""
+    try:
+        return pa_ipc.open_file(src)
+    except pa.ArrowInvalid:
+        src.seek(0)
+        return pa_ipc.open_stream(src)
+
+
+def _read_schema(shard: str) -> pa.Schema:
+    """Dense schema of one shard from its IPC metadata alone — no record
+    batch is read."""
+    with pa.memory_map(shard, "rb") as src:
+        return _dense_schema(_open_shard(src).schema)
+
+
+def _read_table(source) -> pa.Table:
+    """One whole shard, given as a path or as a bytes-like buffer, as a
+    dense table.  Paths are memory-mapped, so file-format shards read
+    zero-copy."""
+    is_path = isinstance(source, str)
+    with pa.memory_map(source, "rb") if is_path else pa.BufferReader(source) as src:
+        table = _open_shard(src).read_all()
+    dense = _dense_schema(table.schema)
+    return table if dense == table.schema else table.cast(dense)
+
+
+def _write_shard(
+    out: str,
+    batches: Iterable[pa.RecordBatch],
+    format: str = "stream",
+    dictionary_encode: Sequence[str] = (),
+) -> int | None:
+    """Stream ``batches`` into one shard at ``out``: 'stream' or 'file'
+    wire format, ``dictionary_encode`` columns written as DictionaryBatch
+    messages with deltas.  The file opens on the first batch, so an empty
+    iterator writes nothing and returns None; otherwise returns the row
+    count."""
+    import pyarrow.compute as pc
+
+    opts = pa_ipc.IpcWriteOptions(emit_dictionary_deltas=True)
+    new_writer = pa_ipc.new_stream if format == "stream" else pa_ipc.new_file
+    sink = writer = None
+    rows = 0
+    for batch in batches:
+        if dictionary_encode:
+            names = batch.schema.names
+            batch = pa.RecordBatch.from_arrays(
+                [
+                    pc.dictionary_encode(c) if n in dictionary_encode else c
+                    for n, c in zip(names, batch.columns)
+                ],
+                names=names,
+            )
+        if writer is None:
+            sink = pa.OSFile(out, "wb")
+            writer = new_writer(sink, batch.schema, options=opts)
+        writer.write_batch(batch)
+        rows += batch.num_rows
+    if writer is None:
+        return None
+    writer.close()
+    sink.close()
+    return rows
 
 
 def write_ipc(
@@ -107,38 +220,13 @@ def write_ipc(
     dict_cols = list(dictionary_encode)
 
     def _write(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.ipc as ipc
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         out = os.path.join(path, f"part-{pid:05d}-{run_id}.{ext}")
-        writer = None
-        rows = 0
-        opts = ipc.IpcWriteOptions(emit_dictionary_deltas=True)
-        for batch in batches:
-            if dict_cols:
-                arrays = [
-                    pc.dictionary_encode(batch.column(name))
-                    if name in dict_cols
-                    else batch.column(name)
-                    for name in batch.schema.names
-                ]
-                batch = pa.RecordBatch.from_arrays(arrays, names=batch.schema.names)
-            if writer is None:
-                sink = pa.OSFile(out, "wb")
-                writer = (
-                    ipc.new_stream(sink, batch.schema, options=opts)
-                    if format == "stream"
-                    else ipc.new_file(sink, batch.schema, options=opts)
-                )
-            writer.write_batch(batch)
-            rows += batch.num_rows
-        if writer is not None:
-            writer.close()
+        rows = _write_shard(out, batches, format, dict_cols)
         yield pa.RecordBatch.from_pydict(
-            {"path": [out if rows or writer else None], "rows": [rows]}
+            {"path": [None if rows is None else out], "rows": [rows or 0]}
         )
 
     manifest = df.mapInArrow(_write, "path string, rows bigint").collect()
@@ -152,56 +240,22 @@ def read_ipc(spark: SparkSession, path: str) -> DataFrame:
     Handles both wire formats and dictionary-encoded columns (dictionaries
     are decoded to dense — the Spark representation; SURVEY §1.2 DICTIONARY).
     """
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    files = _shard_pattern(path)
-
-    with open(files[0], "rb") as fh:
-        try:
-            arrow_schema = ipc.open_file(fh).schema
-        except pa.ArrowInvalid:
-            fh.seek(0)
-            arrow_schema = ipc.open_stream(fh).schema
-
-    # dictionary columns decode to their value type
-    fields = [
-        f.with_type(f.type.value_type) if pa.types.is_dictionary(f.type) else f
-        for f in arrow_schema
-    ]
-    spark_schema = from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True)
-
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
+    files = _shard_files(path)
+    spark_schema = from_arrow_schema(_read_schema(files[0]), prefer_timestamp_ntz=True)
+    # parallelize, not a LocalRelation + repartition: the shard list needs
+    # no exchange to spread over the tasks
+    sc = spark.sparkContext
+    paths_df = spark.createDataFrame(
+        sc.parallelize([(f,) for f in files], min(len(files), sc.defaultParallelism)),
+        "path string",
     )
 
     def _read(batches):
-        import pyarrow as pa_
-        import pyarrow.ipc as ipc_
-
         for b in batches:
             for p in b.column("path").to_pylist():
-                with pa_.memory_map(p, "rb") as source:
-                    try:
-                        reader = ipc_.open_file(source)
-                        table = reader.read_all()
-                    except pa_.ArrowInvalid:
-                        with pa_.memory_map(p, "rb") as s2:
-                            table = ipc_.open_stream(s2).read_all()
-                for col in table.schema.names:
-                    if pa_.types.is_dictionary(table.schema.field(col).type):
-                        idx = table.schema.get_field_index(col)
-                        table = table.set_column(
-                            idx,
-                            table.schema.field(col).with_type(
-                                table.schema.field(col).type.value_type
-                            ),
-                            table.column(col).cast(
-                                table.schema.field(col).type.value_type
-                            ),
-                        )
-                yield from table.to_batches()
+                yield from _read_table(p).to_batches()
 
     return paths_df.mapInArrow(_read, spark_schema)
 
@@ -209,15 +263,12 @@ def read_ipc(spark: SparkSession, path: str) -> DataFrame:
 def write_ipc_single(df: DataFrame, path: str, format: str = "stream") -> None:
     """One-file writer for interop (RecordBatchStream/FileWriter on the
     collected table).  Driver-side — small results only."""
-    import pyarrow as pa
-    import pyarrow.ipc as ipc
-
     table = df.toArrow()
     with pa.OSFile(path, "wb") as sink:
         writer = (
-            ipc.new_stream(sink, table.schema)
+            pa_ipc.new_stream(sink, table.schema)
             if format == "stream"
-            else ipc.new_file(sink, table.schema)
+            else pa_ipc.new_file(sink, table.schema)
         )
         writer.write_table(table)
         writer.close()

@@ -9,9 +9,10 @@ the micro-batch boundary plays the role of message framing.
 
 ``read_ipc_stream`` wires that up: ``binaryFile`` streaming source (built-in
 file discovery/bookkeeping/exactly-once) -> Arrow-batched decode via
-``mapInPandas``.  Dictionary-encoded columns are decoded to dense per batch,
-the same accumulate-and-decode the reference's DictionaryMemo performs
-(ipc/dictionary.h:42).
+``mapInPandas``.  Each landed shard decodes through the shard codec of
+``io.ipc`` (``_read_table`` over the file's bytes): either wire format, and
+dictionary-encoded columns decoded to dense, the same accumulate-and-decode
+the reference's DictionaryMemo performs (ipc/dictionary.h:42).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_arrow_spark.io.ipc import _read_table
 from apache_arrow_spark.session import apply_runtime_confs
 
 
@@ -42,28 +44,9 @@ def read_ipc_stream(spark: SparkSession, path: str, spark_schema) -> DataFrame:
     )
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
         for pdf in batches:
             for blob in pdf["content"]:
-                buf = io.BytesIO(bytes(blob))
-                try:
-                    reader = ipc.open_stream(buf)
-                    table = reader.read_all()
-                except pa.ArrowInvalid:
-                    buf.seek(0)
-                    table = ipc.open_file(buf).read_all()
-                # decode dictionary columns to dense
-                cols = {}
-                for name in table.schema.names:
-                    col = table.column(name)
-                    if pa.types.is_dictionary(col.type):
-                        col = col.cast(col.type.value_type)
-                    cols[name] = col
-                yield pa.table(cols).to_pandas()
+                yield _read_table(blob).to_pandas()
 
     return raw.mapInPandas(_decode, spark_schema)
 

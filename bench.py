@@ -129,15 +129,10 @@ def _stage_shuffle_writes(spark) -> dict[int, int]:
     (stageId -> bytes, attempts summed).  Shuffle volume is deterministic
     for a fixed plan + data, so one reading per query gives a noise-free
     regression metric next to the wall timings."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    store = sc._jsc.sc().statusStore()
-    empty = jvm.java.util.ArrayList()
-    darr = gw.new_array(gw.jvm.double, 0)
-    stages = store.stageList(empty, False, False, darr, empty)
+    from apache_arrow_spark.plans.inspect import stage_list
+
     out: dict[int, int] = {}
-    for i in range(stages.size()):
-        s = stages.apply(i)
+    for s in stage_list(spark):
         out[s.stageId()] = out.get(s.stageId(), 0) + s.shuffleWriteBytes()
     return out
 
@@ -178,15 +173,10 @@ def _stage_metric_totals(spark) -> dict:
     actually ON a core, gc_ms stop-the-world time.  Per-rep deltas
     separate 'the JVM was slow' from 'the tasks were off-CPU' (ambient
     contention), which a wall clock alone cannot."""
-    sc = spark.sparkContext
-    jvm, gw = sc._jvm, sc._gateway
-    store = sc._jsc.sc().statusStore()
-    empty = jvm.java.util.ArrayList()
-    darr = gw.new_array(gw.jvm.double, 0)
-    stages = store.stageList(empty, False, False, darr, empty)
+    from apache_arrow_spark.plans.inspect import stage_list
+
     tot = {"run_ms": 0, "cpu_ns": 0, "gc_ms": 0, "fetch_wait_ms": 0}
-    for i in range(stages.size()):
-        s = stages.apply(i)
+    for s in stage_list(spark):
         tot["run_ms"] += s.executorRunTime()
         tot["cpu_ns"] += s.executorCpuTime()
         tot["gc_ms"] += s.jvmGcTime()

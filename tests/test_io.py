@@ -527,6 +527,133 @@ def test_custom_datasource_write_commit_protocol(spark, tmp_path):
     assert spark.read.format("aas_ipc").load(root).count() == 5
 
 
+@pytest.mark.parametrize("dict_cat", [False, True], ids=["dense", "dictionary"])
+@pytest.mark.parametrize("fmt", ["stream", "file"])
+def test_ipc_shards_read_identically_through_every_reader(spark, tmp_path, fmt, dict_cat):
+    """One shard codec behind all four readers: ``read_ipc``, the
+    ``aas_ipc`` batch and streaming connector, and ``read_ipc_stream``
+    return the same rows and schema for either wire format, with the
+    string column written dense or dictionary-encoded."""
+    from apache_arrow_spark.io.datasource import register_ipc_source
+    from apache_arrow_spark.streaming import read_ipc_stream, run_to_memory_sink
+
+    df = spark.range(300).select(
+        F.col("id"),
+        F.when(F.col("id") % 5 == 0, None)
+        .otherwise((F.col("id") % 3).cast("string"))
+        .alias("cat"),
+        (F.col("id") / 4).alias("v"),
+    )
+    root = str(tmp_path / f"shards_{fmt}_{dict_cat}")
+    write_ipc(
+        df.repartition(3), root, format=fmt,
+        dictionary_encode=["cat"] if dict_cat else (),
+    )
+    register_ipc_source(spark)
+    readers = {
+        "read_ipc": read_ipc(spark, root),
+        "aas_ipc": spark.read.format("aas_ipc").load(root),
+        "aas_ipc_stream": run_to_memory_sink(
+            spark.readStream.format("aas_ipc").load(root), spark, output_mode="append"
+        ),
+        "read_ipc_stream": run_to_memory_sink(
+            read_ipc_stream(spark, root, df.schema), spark, output_mode="append"
+        ),
+    }
+    want_fields = [(f.name, f.dataType) for f in df.schema]
+    want_rows = sorted(df.collect())
+    for name, back in readers.items():
+        assert [(f.name, f.dataType) for f in back.schema] == want_fields, name
+        assert sorted(back.collect()) == want_rows, name
+
+
+def test_ipc_missing_path_raises_and_streams_nothing(spark, tmp_path):
+    """A missing shard directory is FileNotFoundError at every batch read
+    entry point, and "nothing landed yet" to the streaming connector."""
+    from apache_arrow_spark.io.datasource import (
+        ArrowIPCDataSource,
+        ArrowIPCSimpleStreamReader,
+    )
+
+    missing = str(tmp_path / "not_there")
+    with pytest.raises(FileNotFoundError):
+        read_ipc(spark, missing)
+    with pytest.raises(FileNotFoundError):
+        ArrowIPCDataSource(options={"path": missing}).schema()
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    for path in (missing, empty):
+        reader = ArrowIPCSimpleStreamReader(path)
+        assert reader.read({"idx": 0}) == ([], {"idx": 0})
+        assert reader.readBetweenOffsets({"idx": 0}, {"idx": 2}) == []
+
+
+def test_custom_datasource_schema_reads_no_record_batch(tmp_path):
+    """The connector's schema sniff reads IPC metadata only: a shard whose
+    first record batch is truncated still yields its schema."""
+    import pyarrow.ipc as ipc
+
+    from apache_arrow_spark.io.datasource import ArrowIPCDataSource
+
+    tbl = pa.table({"k": pa.array(["a", "b"]).dictionary_encode(), "v": [1, 2]})
+    head = pa.BufferOutputStream()
+    ipc.new_stream(head, tbl.schema).close()  # schema message + end marker
+    full = pa.BufferOutputStream()
+    with ipc.new_stream(full, tbl.schema) as w:
+        w.write_table(tbl)
+    root = tmp_path / "truncated"
+    root.mkdir()
+    # the schema message, then only the first bytes of the batch messages
+    (root / "part-0.arrows").write_bytes(full.getvalue().to_pybytes()[: head.tell() + 8])
+    with pytest.raises(pa.ArrowInvalid):
+        ipc.open_stream(str(root / "part-0.arrows")).read_all()
+    schema = ArrowIPCDataSource(options={"path": str(root)}).schema()
+    assert schema.simpleString() == "struct<k:string,v:bigint>"
+
+
+def test_write_ipc_manifest_skips_list_columns(spark, tmp_path):
+    """Columns without an Arrow min/max (lists) get no manifest entry;
+    the other columns still prune."""
+    import json
+
+    from pyspark.sql.datasource import EqualTo
+
+    from apache_arrow_spark.io.datasource import ArrowIPCShardReader, write_ipc_manifest
+
+    df = spark.range(400).select(
+        F.col("id"), F.array(F.col("id"), F.col("id") + 1).alias("pair")
+    )
+    root = str(tmp_path / "listcol")
+    write_ipc(df.repartitionByRange(4, "id"), root)
+    assert write_ipc_manifest(spark, root) == 4
+    with open(os.path.join(root, "_manifest.json")) as fh:
+        manifest = json.load(fh)
+    assert len(manifest) == 4
+    assert all(set(cols) == {"id"} for cols in manifest.values())
+    r = ArrowIPCShardReader(root)
+    r.pushFilters([EqualTo(("id",), 7)])
+    assert len(r.partitions()) == 1
+
+
+def test_empty_partitions_write_no_shard(spark, tmp_path):
+    """Both shard writers open a shard on its first batch: partitions that
+    receive no rows leave no file."""
+    from apache_arrow_spark.io.datasource import register_ipc_source
+
+    df = spark.range(2).repartition(4)
+    sink_dir = str(tmp_path / "sink")
+    assert write_ipc(df, sink_dir) == 2
+    assert len(os.listdir(sink_dir)) == 2
+    register_ipc_source(spark)
+    conn_dir = str(tmp_path / "connector")
+    df.write.format("aas_ipc").mode("append").save(conn_dir)
+    files = os.listdir(conn_dir)  # no staging directory is left either
+    assert len(files) == 2 and all(f.endswith(".arrows") for f in files)
+    assert sorted(spark.read.format("aas_ipc").load(conn_dir).collect()) == sorted(
+        df.collect()
+    )
+
+
 def test_row_group_metadata_and_prune(spark, tmp_path):
     import pyarrow.parquet as pq
 
