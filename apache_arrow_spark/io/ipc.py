@@ -141,26 +141,28 @@ def _write_shard(
     new_writer = pa_ipc.new_stream if format == "stream" else pa_ipc.new_file
     sink = writer = None
     rows = 0
-    for batch in batches:
-        if dictionary_encode:
-            names = batch.schema.names
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    pc.dictionary_encode(c) if n in dictionary_encode else c
-                    for n, c in zip(names, batch.columns)
-                ],
-                names=names,
-            )
-        if writer is None:
-            sink = pa.OSFile(out, "wb")
-            writer = new_writer(sink, batch.schema, options=opts)
-        writer.write_batch(batch)
-        rows += batch.num_rows
-    if writer is None:
-        return None
-    writer.close()
-    sink.close()
-    return rows
+    try:
+        for batch in batches:
+            if dictionary_encode:
+                names = batch.schema.names
+                batch = pa.RecordBatch.from_arrays(
+                    [
+                        pc.dictionary_encode(c) if n in dictionary_encode else c
+                        for n, c in zip(names, batch.columns)
+                    ],
+                    names=names,
+                )
+            if writer is None:
+                sink = pa.OSFile(out, "wb")
+                writer = new_writer(sink, batch.schema, options=opts)
+            writer.write_batch(batch)
+            rows += batch.num_rows
+        if writer is not None:
+            writer.close()
+    finally:
+        if sink is not None:
+            sink.close()
+    return None if writer is None else rows
 
 
 def write_ipc(
